@@ -74,7 +74,7 @@ def exact_dedup(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.groupBy(text_col).agg(F.min("doc_id").alias("doc_id")).select("doc_id", text_col)
 
 
-def _local_reuse(df: DataFrame) -> DataFrame:
+def _lazy_checkpoint(df: DataFrame) -> DataFrame:
     """Default multi-consumer reuse point: lazy localCheckpoint.
 
     SINGLE-BOX ASSUMPTION: local checkpoints live in executor block
@@ -105,13 +105,11 @@ def run_dedup_resumable(
     import hashlib
 
     from kgp.lineage import LineageLog
+    from kgp.reuse import content_fingerprint
 
     log = LineageLog(outdir, n_buckets=16)
     if fingerprint is None:
-        h = df.select(
-            F.bit_xor(F.xxhash64(*df.columns)).alias("h"), F.count("*").alias("n")
-        ).first()
-        fingerprint = f"{h['h']}:{h['n']}"
+        fingerprint = content_fingerprint(df)
     fingerprint += ":" + hashlib.md5(repr(sorted(kw.items())).encode()).hexdigest()[:8]
 
     def stage_reuse(name):
@@ -137,7 +135,7 @@ def ngram_jaccard_pairs(
     text_col: str = "text",
     max_shingle_df: int | None = 1000,
     on_drop=None,
-    reuse=_local_reuse,
+    reuse=_lazy_checkpoint,
 ) -> DataFrame:
     """Candidate near-dup pairs (doc_a < doc_b) with shingle Jaccard >= threshold.
 
@@ -156,7 +154,7 @@ def ngram_jaccard_pairs(
     sh = word_shingles(df, text_col, n).withColumn("n_sh", F.size("shingles"))
     # both sides of the self-join read this; the reuse point makes
     # shingling run once, not once per side (default: localCheckpoint,
-    # single-box only — see _local_reuse / run_dedup_resumable)
+    # single-box only — see _lazy_checkpoint / run_dedup_resumable)
     ex = reuse(sh.select("doc_id", "n_sh", F.explode("shingles").alias("g")))
     if max_shingle_df is not None:
         hot = (
@@ -207,7 +205,7 @@ def minhash_lsh_pairs(
     text_col: str = "text",
     max_bucket_size: int | None = 1000,
     on_drop=None,
-    reuse=_local_reuse,
+    reuse=_lazy_checkpoint,
 ) -> DataFrame:
     """Candidate pairs agreeing on at least one full LSH band.
 
@@ -246,7 +244,7 @@ def minhash_lsh_pairs(
     ).select("doc_id", "bk.band", "bk.key")
     # self-joined below — the reuse point makes the K-permutation
     # signature computation run once (default: localCheckpoint,
-    # single-box only — see _local_reuse / run_dedup_resumable)
+    # single-box only — see _lazy_checkpoint / run_dedup_resumable)
     banded = reuse(banded)
     if max_bucket_size is not None:
         big = (

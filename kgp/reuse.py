@@ -9,56 +9,66 @@ as the pipeline deepens).
 
 Two interchangeable implementations, both ``(df, name) -> DataFrame``:
 
-- :func:`local_reuse` — eager ``localCheckpoint``. Fastest on a single
-  box, but blocks live in executor/driver block storage: NOT
-  fault-tolerant on executor loss, and at sf16 the pinned tagged/mention
-  tables forced a 16 GB driver heap (SCALING.md "Round-4: sf16 memory
-  finding"). The single-JVM default.
+- :func:`default_reuse` — eager ``localCheckpoint`` whose storage level
+  adapts to the input size. Fastest on a single box, but blocks live in
+  executor/driver block storage: NOT fault-tolerant on executor loss,
+  and at sf16 the pinned tagged/mention tables forced a 16 GB driver
+  heap (SCALING.md "Round-4: sf16 memory finding").
 
 - :func:`lineage_reuse` — each reuse point becomes a
   :class:`kgp.lineage.LineageLog` stage TABLE (bucketed parquet + a
   per-partition manifest, the sandbox analogue of Iceberg
   ``overwritePartitions``): executor-loss safe, resumable mid-run (a
   crashed job skips completed reuse points on re-run), and the blocks
-  never touch the block manager — the cluster profile, and the same
-  mechanism :func:`kgp.ops.dedup.run_dedup_resumable` already uses.
-
-``KGP_REUSE=table`` flips the default from local to lineage-table
-(``KGP_REUSE_DIR`` pins the table root; otherwise a fresh temp dir per
-pipeline run, so repeated bench legs re-execute rather than resume).
+  never touch the block manager — the cluster/resume profile, and the
+  same mechanism :func:`kgp.ops.dedup.run_dedup_resumable` already uses.
+  Callers pass it explicitly, keyed by :func:`input_fingerprint`.
 """
 
 from __future__ import annotations
 
 import hashlib
 import os
-import tempfile
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+# input-parquet thresholds of default_reuse's storage tiers
+SER_BYTES = 32_000_000
+DISK_BYTES = 96_000_000
 
-def input_fingerprint(transcripts: DataFrame, cfg) -> str:
-    """Partitioning-independent content hash of the input + config
-    (drives stage-skip on resume: any input or config change invalidates
-    every downstream stage table)."""
-    h = transcripts.select(
-        F.bit_xor(F.xxhash64("conv_id", "turn_idx", "text")).alias("h"),
-        F.count("*").alias("n"),
+
+def content_fingerprint(df: DataFrame) -> str:
+    """Partitioning-independent content hash of every column of ``df``.
+
+    Per-row xxhash64 (plus a null mask, since xxhash64 skips nulls) is
+    combined by a DECIMAL sum: unlike ``bit_xor`` it never cancels a pair
+    of identical rows, and unlike a long sum it cannot wrap."""
+    cols = df.columns
+    row_h = F.xxhash64(*cols, *[F.isnull(c) for c in cols])
+    h = df.select(
+        F.sum(row_h.cast("decimal(38,0)")).alias("h"), F.count("*").alias("n")
     ).first()
+    return f"{h['h']}:{h['n']}"
+
+
+def input_fingerprint(transcripts: DataFrame, model, cfg) -> str:
+    """Resume key of one pipeline run: content hash of every transcript
+    column, of the ``PipelineModel`` (tagger surfaces, surface groups,
+    alias-dictionary content) and of the config. Any change to any of
+    them invalidates every downstream stage table."""
+    model_h = hashlib.md5(
+        repr(
+            (
+                list(model.surfaces),
+                sorted(model.surface_groups.items()),
+                content_fingerprint(model.alias_dict),
+            )
+        ).encode()
+    ).hexdigest()[:12]
     cfg_h = hashlib.md5(repr(cfg).encode()).hexdigest()[:12]
-    return f"{h['h']}:{h['n']}:{cfg_h}"
-
-
-def local_reuse(df: DataFrame, name: str | None = None) -> DataFrame:
-    """Eager localCheckpoint (single-JVM default). KGP_CKPT_SER=1 stores
-    the blocks serialized (compact UnsafeRow bytes — less block-manager
-    residency, one extra copy per consumer read)."""
-    if os.environ.get("KGP_CKPT_SER") == "1":
-        from pyspark import StorageLevel
-
-        return df.localCheckpoint(eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
-    return df.localCheckpoint()
+    return f"{content_fingerprint(transcripts)}:{model_h}:{cfg_h}"
 
 
 def input_bytes(df: DataFrame) -> int:
@@ -78,8 +88,8 @@ def input_bytes(df: DataFrame) -> int:
     return total
 
 
-def local_reuse_for(in_bytes: int = 0):
-    """Scale-adaptive local profile: pick the checkpoint storage level
+def default_reuse(in_bytes: int = 0):
+    """The local reuse hook: eager localCheckpoint, storage level picked
     from the job's input size.
 
     Deserialized row blocks (localCheckpoint's default) are fastest when
@@ -90,48 +100,32 @@ def local_reuse_for(in_bytes: int = 0):
     the 4-core leg, and switching the pins to serialized UnsafeRow bytes
     cut that leg ~23% (same host, same input). At sf0.1 the same switch
     is a ~7% LOSS (the extra ser/deser copy on a job whose pins are a
-    few MB). So: serialized above KGP_CKPT_SER_MB (default 32 MB of
-    input parquet — sf4/sf16 qualify, the sf0.1 driver bench does not),
-    deserialized below; KGP_CKPT_SER=0/1 force-overrides either way.
+    few MB). So: serialized above SER_BYTES of input parquet (sf4/sf16
+    qualify, the sf0.1 driver bench does not), deserialized below.
 
-    Above KGP_CKPT_DISK_MB (default 96 MB of input parquet — sf16
-    qualifies, sf4 does not) the pins go DISK_ONLY: the round-5 jstack
-    probe of the sf16 4-core leg caught the 70 s driver-only gap
-    red-handed as SINGLE-THREADED block eviction — the broadcast-exchange
-    thread calling MemoryStore.evictBlocksToFreeSpace -> DiskStore.putBytes
-    to push pinned checkpoint blocks to disk one at a time while every
-    core idled. DISK_ONLY pays the same disk write, but inside the
-    checkpoint job's parallel tasks (and the OS page cache serves the
-    re-reads), so the serial stall never forms.
+    Above DISK_BYTES (sf16 qualifies, sf4 does not) the pins go
+    DISK_ONLY: the round-5 jstack probe of the sf16 4-core leg caught
+    the 70 s driver-only gap red-handed as SINGLE-THREADED block
+    eviction — the broadcast-exchange thread calling
+    MemoryStore.evictBlocksToFreeSpace -> DiskStore.putBytes to push
+    pinned checkpoint blocks to disk one at a time while every core
+    idled. DISK_ONLY pays the same disk write, but inside the checkpoint
+    job's parallel tasks (and the OS page cache serves the re-reads), so
+    the serial stall never forms.
+
+    ``KGP_CKPT_LEVEL=deser|ser|disk`` overrides the choice (the two arms
+    of ``tools/pin_ab.py``).
     """
-    level = os.environ.get("KGP_CKPT_LEVEL")
-    if not level:
-        env = os.environ.get("KGP_CKPT_SER")
-        if env == "1":
-            level = "ser"
-        elif env == "0":
-            level = "deser"
-        else:
-            disk_mb = float(os.environ.get("KGP_CKPT_DISK_MB", "96"))
-            ser_mb = float(os.environ.get("KGP_CKPT_SER_MB", "32"))
-            level = (
-                "disk" if in_bytes > disk_mb * 1e6
-                else "ser" if in_bytes > ser_mb * 1e6
-                else "deser"
-            )
-
-    if level == "deser":
-        return lambda df, name=None: df.localCheckpoint()
-
-    from pyspark import StorageLevel
-
-    sl = StorageLevel.DISK_ONLY if level == "disk" else StorageLevel.MEMORY_AND_DISK
+    level = os.environ.get("KGP_CKPT_LEVEL") or (
+        "disk" if in_bytes > DISK_BYTES else "ser" if in_bytes > SER_BYTES else "deser"
+    )
+    # None = localCheckpoint's default (deserialized) block storage
+    sl = {"ser": StorageLevel.MEMORY_AND_DISK, "disk": StorageLevel.DISK_ONLY}.get(level)
 
     def reuse(df: DataFrame, name: str | None = None) -> DataFrame:
         return df.localCheckpoint(eager=True, storageLevel=sl)
 
-    reuse.serialized = True  # introspectable in tests
-    reuse.level = level
+    reuse.level = level  # introspectable in tests
     return reuse
 
 
@@ -168,20 +162,3 @@ def lineage_reuse(
 
     reuse.lineage = log  # callers can read manifests / skew reports
     return reuse
-
-
-def default_reuse(
-    spark: SparkSession,
-    fingerprint: str = "adhoc",
-    outdir: str | None = None,
-    input_df: DataFrame | None = None,
-):
-    """The env-selected profile: ``KGP_REUSE=table`` -> lineage stage
-    tables (cluster profile), anything else -> local checkpoints whose
-    storage level adapts to the input scale (:func:`local_reuse_for`)."""
-    if os.environ.get("KGP_REUSE") == "table":
-        outdir = outdir or os.environ.get("KGP_REUSE_DIR") or tempfile.mkdtemp(
-            prefix="kgp-reuse-"
-        )
-        return lineage_reuse(spark, outdir, fingerprint)
-    return local_reuse_for(input_bytes(input_df) if input_df is not None else 0)

@@ -27,6 +27,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from kgp.reuse import default_reuse
+
 EDGE_SCHEMA = "h long, r int, t long"
 
 
@@ -59,7 +61,7 @@ def _dense_id_dicts(
     Output ids are byte-identical to numbering each dictionary separately.
     """
     if reuse is None:
-        from kgp.reuse import local_reuse as reuse
+        reuse = default_reuse()
     spark = triples.sparkSession
     num_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     keys = (
@@ -115,7 +117,7 @@ def materialize_graph(
     lineage stage table instead.
     """
     if reuse is None:
-        from kgp.reuse import local_reuse as reuse
+        reuse = default_reuse()
     ents, rels, _n_ent, n_rel = _dense_id_dicts(triples, reuse=reuse)
     fwd = reuse(
         triples.join(F.broadcast(ents.withColumnRenamed("entity_id", "subj")), "subj")
@@ -139,7 +141,7 @@ def kgat_construct(kg: DataFrame, cf: DataFrame, reuse=None) -> dict:
     Returns dict of DataFrames: edges, adjacency, stats (single row).
     """
     if reuse is None:
-        from kgp.reuse import local_reuse as reuse
+        reuse = default_reuse()
     # deduped kg feeds the stats agg AND fwd/rev below: pin it so the
     # dedup shuffle runs once, and batch both extent statistics (:95-98
     # max-id convention) into ONE driver job instead of two first() jobs
@@ -421,17 +423,15 @@ def kgat_cf_embedding(
     concat); it is pinned through the ``reuse`` hook (kgp.reuse) so the
     lineage does not re-execute the previous layers exponentially:
     eager localCheckpoint in the single-JVM default, a LineageLog stage
-    table per layer under the cluster profile (KGP_REUSE=table or an
-    explicit ``reuse=lineage_reuse(...)``) — exactly like the dedup ops'
+    table per layer under an explicit ``reuse=lineage_reuse(...)`` (the
+    cluster profile) — exactly like the dedup ops'
     resumable path, and free of the block-manager residency that drove
     the sf16 driver-heap finding (SCALING.md).
     L2 normalization (torch.functional.normalize eps=1e-12) is a per-h
     aggregate + an equi-join back — no windows, no driver round-trip.
     """
     if reuse is None:
-        from kgp.reuse import default_reuse
-
-        reuse = default_reuse(spark, fingerprint="cf_embedding")
+        reuse = default_reuse()
     emb_rows = [
         (i, j, float(x)) for i, row in enumerate(ent_emb) for j, x in enumerate(row)
     ]

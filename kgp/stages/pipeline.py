@@ -14,6 +14,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kgp.config import DEFAULT_CONFIG, PipelineConfig
+from kgp.reuse import default_reuse as _default_reuse
+from kgp.reuse import input_bytes
 from kgp.stages.assemble import assemble_documents
 from kgp.stages.coref import (
     cluster_unionfind,
@@ -26,26 +28,6 @@ from kgp.stages.mentions import mentions_from_tagged, pair_turn_tokens, tag_turn
 from kgp.stages.pairs import coref_pairs, re_pairs
 from kgp.stages.relations import classify_relations
 from kgp.stages.triples import assemble_triples
-
-
-def _default_reuse(spark: SparkSession, transcripts: DataFrame, cfg: PipelineConfig):
-    """Profile-selected reuse hook for one pipeline run (kgp.reuse).
-
-    Local profile (default): eager localCheckpoint per boundary.
-    Cluster profile (KGP_REUSE=table): LineageLog stage tables keyed by
-    the input+config fingerprint — executor-loss safe, resumable, zero
-    block-manager residency (the sf16 16 GB-driver-heap finding in
-    SCALING.md is exactly the local profile's block pins). The
-    fingerprint scan only runs under the table profile."""
-    import os
-
-    from kgp.reuse import default_reuse, input_fingerprint
-
-    if os.environ.get("KGP_REUSE") == "table":
-        return default_reuse(spark, fingerprint=input_fingerprint(transcripts, cfg))
-    # local profile: storage level adapts to input scale (serialized
-    # pins above ~32 MB of input parquet — see kgp.reuse.local_reuse_for)
-    return default_reuse(spark, input_df=transcripts)
 
 
 def _run_concurrently(spark: SparkSession, *thunks) -> list:
@@ -95,10 +77,12 @@ def run_pipeline(
     reuse=None,
 ) -> dict:
     # Stage boundaries are materialized AND lineage-truncated through the
-    # `reuse` hook (kgp.reuse): localCheckpoint in the single-JVM profile,
-    # LineageLog stage tables (the Iceberg overwritePartitions analogue)
-    # under KGP_REUSE=table — which truncates the plan the same way, adds
-    # fault tolerance + mid-run resume, and keeps the driver heap flat.
+    # `reuse` hook (kgp.reuse): by default a localCheckpoint whose storage
+    # level adapts to the input size (metadata only, no fingerprint job);
+    # pass reuse=lineage_reuse(spark, outdir, input_fingerprint(...)) for
+    # LineageLog stage tables (the Iceberg overwritePartitions analogue),
+    # which truncate the plan the same way, add fault tolerance + mid-run
+    # resume, and keep the driver heap flat.
     # Either way the materialization keeps the logical plan of every
     # downstream query small — with plain persist() the full pipeline tree
     # is re-analyzed on every action and Catalyst planning dominates.
@@ -108,7 +92,7 @@ def run_pipeline(
     # broadcast-exchange threads), and only an already-materialized
     # checkpoint guarantees the producer runs exactly once.
     if reuse is None:
-        reuse = _default_reuse(spark, transcripts, cfg)
+        reuse = _default_reuse(input_bytes(transcripts))
     documents = assemble_documents(transcripts, cfg)
     # tagger input is raw turns (narrow map, no shuffle): mentions are
     # keyed (conv_id, turn_idx), so document assembly is a sibling

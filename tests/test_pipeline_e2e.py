@@ -120,3 +120,59 @@ def test_cluster_ids_are_min_mention_id(results):
         by_cluster.setdefault(r["cluster_id"], []).append(r["mention_id"])
     for cid, members in by_cluster.items():
         assert cid == min(members)
+
+
+QUIET_TEXT = "ok thanks, sounds good"
+_PROJ = {
+    "mentions": ("conv_id", "turn_idx", "start", "end", "mention", "label", "mention_id"),
+    "relations": ("conv_id", "head_mention_id", "tail_mention_id", "rel"),
+    "clusters": ("mention_id", "cluster_id"),
+    "links": ("cluster_id", "entity_id"),
+    "triples": ("conv_id", "subj", "pred", "obj", "src_turns"),
+}
+
+
+def _proj(recs, cols):
+    return sorted(tuple(tuple(r[c]) if c == "src_turns" else r[c] for c in cols) for r in recs)
+
+
+def test_tag_turns_mention_free_batch(spark):
+    from kgp.stages.mentions import tag_turns
+
+    model = fixture_model(spark, FX)
+    t = spark.createDataFrame(
+        [("conv-quiet", i, QUIET_TEXT) for i in range(5)], "conv_id string, turn_idx int, text string"
+    )
+    assert tag_turns(spark, t, model.surfaces).count() == 0
+
+
+@pytest.mark.parametrize("batch", [1, 16384])
+def test_mention_free_conversation_matches_oracle(spark, batch):
+    """Every Arrow batch size is part of the input domain: at 1 record per
+    batch most tagger batches are mention-free, and at 16384 the quiet
+    conversation's own input partition is one mention-free batch."""
+    fx = FixtureConfig(n_conversations=20, n_entities=30)
+    gaz = make_gazetteer(fx)
+    rows = make_transcripts(fx, gaz)
+    quiet = [
+        dict(rows[0], conv_id="conv-quiet", turn_idx=i, role="user", text=QUIET_TEXT, tool=None)
+        for i in range(5)
+    ]
+    t = spark.createDataFrame(rows, schema=TRANSCRIPT_SCHEMA).union(
+        spark.createDataFrame(quiet, schema=TRANSCRIPT_SCHEMA).coalesce(1)
+    )
+    gold = oracle_pipeline(rows + quiet, gaz)
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, str(batch))
+    try:
+        out = run_pipeline(spark, t, fixture_model(spark, fx))
+        for name, cols in _PROJ.items():
+            assert _proj(out[name].collect(), cols) == _proj(gold[name], cols), name
+        assert sorted(tuple(e) for e in out["edges"].collect()) == sorted(gold["edges"])
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)

@@ -1,15 +1,18 @@
-"""Resume test (SURVEY.md §5.2-3): kill after stage k, re-run, byte-identical
-output; lineage shows skipped stages."""
+"""Resume test (SURVEY.md §5.2-3) through the shipped composition:
+``run_pipeline(..., reuse=lineage_reuse(...))`` — kill after stage k,
+re-run, byte-identical output; lineage shows skipped stages; any change
+to the input, the model or the config invalidates every stage table."""
 
 import json
 import os
 
 import pytest
+from pyspark.sql import functions as F
 
-from kgp.config import FixtureConfig
-from kgp.fixtures import TRANSCRIPT_SCHEMA, make_transcripts
-from kgp.stages.pipeline import fixture_model
-from kgp.stages.runner import run_pipeline_resumable
+from kgp.config import DEFAULT_CONFIG, FixtureConfig
+from kgp.fixtures import ALIAS_SCHEMA, TRANSCRIPT_SCHEMA, alias_dict_rows, make_gazetteer, make_transcripts
+from kgp.reuse import input_fingerprint, lineage_reuse
+from kgp.stages.pipeline import PipelineModel, fixture_model, run_pipeline
 
 FX = FixtureConfig(n_conversations=20, n_entities=30)
 
@@ -21,46 +24,100 @@ def _snap(out):
     }
 
 
+def _run(spark, t, model, outdir, cfg=DEFAULT_CONFIG):
+    reuse = lineage_reuse(spark, outdir, input_fingerprint(t, model, cfg))
+    return run_pipeline(spark, t, model, cfg, reuse=reuse), reuse.lineage
+
+
 def test_resume_skips_and_reproduces(spark, tmp_path):
     rows = make_transcripts(FX)
     t = spark.createDataFrame(rows, schema=TRANSCRIPT_SCHEMA)
     model = fixture_model(spark, FX)
     outdir = str(tmp_path / "run")
+    ldir = os.path.join(outdir, "_lineage")
 
-    out1 = run_pipeline_resumable(spark, t, model, outdir)
+    out1, log = _run(spark, t, model, outdir)
     snap1 = _snap(out1)
     assert snap1["triples"], "pipeline produced no triples"
+    tagged1 = open(os.path.join(ldir, "tagged.json")).read()
 
-    # simulate a crash after 'relations': wipe manifests of later stages
-    for stage in ["clusters", "links", "triples", "edges"]:
-        os.remove(os.path.join(outdir, "_lineage", f"{stage}.json"))
+    # simulate a crash after the tagger and relation branch: wipe the
+    # manifests of every later reuse point
+    wiped = ["clusters", "triples", "graph_ids", "graph_fwd"]
+    for stage in wiped:
+        os.remove(os.path.join(ldir, f"{stage}.json"))
 
-    out2 = run_pipeline_resumable(spark, t, model, outdir)
-    snap2 = _snap(out2)
-    assert snap2 == snap1  # byte-identical output after resume
+    out2, _ = _run(spark, t, model, outdir)
+    assert _snap(out2) == snap1  # byte-identical output after resume
+    # earlier stages were skipped (manifest untouched), wiped ones recommitted
+    assert open(os.path.join(ldir, "tagged.json")).read() == tagged1
+    assert all(log.read_manifest(s)["status"] == "ok" for s in wiped)
 
-    # earlier stages were skipped: their manifests still carry run-1 commit times
-    m1 = json.load(open(os.path.join(outdir, "_lineage", "mentions.json")))
+    # per-partition metrics present and consistent: the tagged stage holds
+    # one row per mention plus one token row per multi-mention turn
+    m1 = json.loads(tagged1)
     assert m1["status"] == "ok"
-    # per-partition metrics present and consistent
-    assert sum(p["rows_out"] for p in m1["partitions"]) == len(snap1["mentions"])
+    n_tagged = len(snap1["mentions"]) + out1["turn_tokens"].count()
+    assert sum(p["rows_out"] for p in m1["partitions"]) == n_tagged
 
     # changed input -> everything rebuilds and output differs
     rows3 = make_transcripts(FixtureConfig(n_conversations=30, n_entities=30))
     t3 = spark.createDataFrame(rows3, schema=TRANSCRIPT_SCHEMA)
-    out3 = run_pipeline_resumable(spark, t3, model, outdir)
+    out3, _ = _run(spark, t3, model, outdir)
     assert len(_snap(out3)["mentions"]) > len(snap1["mentions"])
-    m3 = json.load(open(os.path.join(outdir, "_lineage", "mentions.json")))
+    m3 = log.read_manifest("tagged")
     assert m3["input"] != m1["input"]  # fingerprint change recorded
+
+
+def test_resume_after_alias_dict_change_is_fresh(spark, tmp_path):
+    """Resuming a lineage dir under a halved alias dictionary must serve
+    the fresh run's triples and edges, not the stale ones."""
+    rows = make_transcripts(FX)
+    t = spark.createDataFrame(rows, schema=TRANSCRIPT_SCHEMA)
+    model = fixture_model(spark, FX)
+    alias_rows = alias_dict_rows(make_gazetteer(FX))
+    halved = PipelineModel(
+        model.surfaces,
+        model.surface_groups,
+        spark.createDataFrame(alias_rows[: len(alias_rows) // 2], schema=ALIAS_SCHEMA),
+    )
+
+    outdir = str(tmp_path / "run")
+    full = _snap(_run(spark, t, model, outdir)[0])
+    resumed = _snap(_run(spark, t, halved, outdir)[0])
+    fresh = _snap(_run(spark, t, halved, str(tmp_path / "fresh"))[0])
+    assert fresh["links"] != full["links"]  # the change is visible in the output
+    assert resumed == fresh
+    assert input_fingerprint(t, halved, DEFAULT_CONFIG) != input_fingerprint(t, model, DEFAULT_CONFIG)
+
+
+def test_fingerprint_covers_every_column_and_duplicates(spark):
+    rows = make_transcripts(FixtureConfig(n_conversations=4, n_entities=12))
+    t = spark.createDataFrame(rows, schema=TRANSCRIPT_SCHEMA)
+    model = fixture_model(spark, FixtureConfig(n_conversations=4, n_entities=12))
+    fp = input_fingerprint(t, model, DEFAULT_CONFIG)
+
+    # role is not read by the tagger, but documents carry it
+    assert input_fingerprint(t.withColumn("role", F.lit("system")), model, DEFAULT_CONFIG) != fp
+
+    # the same row count, each set a duplicated row pair: a cancelling
+    # combiner (bit_xor) would hash both tables alike
+    def with_pair(r):
+        return spark.createDataFrame(rows + [r, r], schema=TRANSCRIPT_SCHEMA)
+
+    a = dict(rows[0], conv_id="dup", text="first duplicate")
+    b = dict(rows[0], conv_id="dup", text="second duplicate")
+    fp_a = input_fingerprint(with_pair(a), model, DEFAULT_CONFIG)
+    assert fp_a != input_fingerprint(with_pair(b), model, DEFAULT_CONFIG)
+    assert fp_a != fp
 
 
 def test_skew_report(spark, tmp_path):
     rows = make_transcripts(FixtureConfig(n_conversations=15, n_entities=30, skew_conv_turns=300))
     t = spark.createDataFrame(rows, schema=TRANSCRIPT_SCHEMA)
     model = fixture_model(spark, FixtureConfig(n_conversations=15, n_entities=30))
-    outdir = str(tmp_path / "skewrun")
-    out = run_pipeline_resumable(spark, t, model, outdir)
-    rep = out["lineage"].skew_report("mentions")
+    _, log = _run(spark, t, model, str(tmp_path / "skewrun"))
+    rep = log.skew_report("tagged")
     assert rep["max"] >= rep["median"] > 0
 
 

@@ -1,15 +1,16 @@
-"""Cluster-profile reuse points (kgp.reuse): the pipeline's and
-kgat_cf_embedding's multi-consumer pins route through LineageLog stage
-tables instead of localCheckpoint, with identical results — the fix for
-the sf16 driver-heap finding (SCALING.md) and the executor-loss story.
+"""Reuse points (kgp.reuse): the pipeline's and kgat_cf_embedding's
+multi-consumer pins route through LineageLog stage tables (cluster
+profile) or adaptive local checkpoints (default) with identical results —
+the fix for the sf16 driver-heap finding (SCALING.md) and the
+executor-loss story.
 """
 
 import json
 import os
 
-from kgp.config import FixtureConfig
+from kgp.config import DEFAULT_CONFIG, FixtureConfig
 from kgp.fixtures import TRANSCRIPT_SCHEMA, make_transcripts
-from kgp.reuse import input_fingerprint, lineage_reuse, local_reuse
+from kgp.reuse import DISK_BYTES, SER_BYTES, default_reuse, input_fingerprint, lineage_reuse
 from kgp.stages.pipeline import fixture_model, run_pipeline
 
 FX = FixtureConfig(n_conversations=20, n_entities=30)
@@ -25,7 +26,7 @@ def test_pipeline_table_reuse_matches_local(spark, tmp_path):
     model = fixture_model(spark, FX)
 
     base = _snap(run_pipeline(spark, t, model))
-    fp = input_fingerprint(t, None)
+    fp = input_fingerprint(t, model, DEFAULT_CONFIG)
     reuse = lineage_reuse(spark, str(tmp_path / "stages"), fp)
     out = run_pipeline(spark, t, model, reuse=reuse)
 
@@ -46,19 +47,6 @@ def test_pipeline_table_reuse_matches_local(spark, tmp_path):
     assert _snap(out2) == base
 
 
-def test_env_profile_selects_table_reuse(spark, tmp_path, monkeypatch):
-    rows = make_transcripts(FixtureConfig(n_conversations=8, n_entities=20))
-    t = spark.createDataFrame(rows, schema=TRANSCRIPT_SCHEMA)
-    model = fixture_model(spark, FixtureConfig(n_conversations=8, n_entities=20))
-    base = sorted(tuple(r) for r in run_pipeline(spark, t, model)["triples"].collect())
-
-    monkeypatch.setenv("KGP_REUSE", "table")
-    monkeypatch.setenv("KGP_REUSE_DIR", str(tmp_path / "envstages"))
-    out = run_pipeline(spark, t, model)
-    assert sorted(tuple(r) for r in out["triples"].collect()) == base
-    assert os.path.isdir(str(tmp_path / "envstages" / "_lineage"))
-
-
 def test_cf_embedding_table_reuse_matches_local(spark, tmp_path):
     import numpy as np
 
@@ -77,7 +65,7 @@ def test_cf_embedding_table_reuse_matches_local(spark, tmp_path):
     def snap(df):
         return sorted((r["h"], r["k"], round(r["val"], 9)) for r in df.collect())
 
-    base = snap(kgat_cf_embedding(spark, att, emb, layers, reuse=local_reuse))
+    base = snap(kgat_cf_embedding(spark, att, emb, layers, reuse=default_reuse()))
     table = snap(
         kgat_cf_embedding(
             spark, att, emb, layers,
@@ -89,52 +77,44 @@ def test_cf_embedding_table_reuse_matches_local(spark, tmp_path):
 
 
 def test_adaptive_ckpt_storage_selection(monkeypatch):
-    """local_reuse_for picks serialized pins above the input-size
-    threshold, deserialized below, with KGP_CKPT_SER force-overriding —
-    the round-5 finding: serialized pins cut the 4-core sf16 leg ~23%
-    (bandwidth/residency) but cost ~7% at sf0.1 (extra copy)."""
-    from kgp.reuse import local_reuse_for
-
-    monkeypatch.delenv("KGP_CKPT_SER", raising=False)
-    assert not getattr(local_reuse_for(1_000_000), "serialized", False)
-    assert getattr(local_reuse_for(140_000_000), "serialized", False)
-    monkeypatch.setenv("KGP_CKPT_SER", "0")
-    assert not getattr(local_reuse_for(140_000_000), "serialized", False)
-    monkeypatch.setenv("KGP_CKPT_SER", "1")
-    assert getattr(local_reuse_for(0), "serialized", False)
-
-
-def test_adaptive_ckpt_pipeline_equivalence(spark, monkeypatch):
-    """Serialized vs deserialized pins are a pure storage-format choice:
-    identical pipeline outputs either way."""
-    from kgp.fixtures import TRANSCRIPT_SCHEMA, make_transcripts
-
-    rows = make_transcripts(FX)
-    t = spark.createDataFrame(rows, schema=TRANSCRIPT_SCHEMA)
-    model = fixture_model(spark, FX)
-    monkeypatch.setenv("KGP_CKPT_SER", "0")
-    base = _snap(run_pipeline(spark, t, model))
-    monkeypatch.setenv("KGP_CKPT_SER", "1")
-    ser = _snap(run_pipeline(spark, t, model))
-    assert base == ser
-    monkeypatch.delenv("KGP_CKPT_SER")
-    monkeypatch.setenv("KGP_CKPT_LEVEL", "disk")
-    disk = _snap(run_pipeline(spark, t, model))
-    assert base == disk
+    """The default hook picks serialized pins above SER_BYTES of input,
+    deserialized at or below, with KGP_CKPT_LEVEL force-overriding either
+    way — the round-5 finding: serialized pins cut the 4-core sf16 leg
+    ~23% (bandwidth/residency) but cost ~7% at sf0.1 (extra copy)."""
+    monkeypatch.delenv("KGP_CKPT_LEVEL", raising=False)
+    assert default_reuse().level == "deser"
+    assert default_reuse(SER_BYTES).level == "deser"
+    assert default_reuse(SER_BYTES + 1).level == "ser"
+    monkeypatch.setenv("KGP_CKPT_LEVEL", "deser")
+    assert default_reuse(SER_BYTES + 1).level == "deser"
+    monkeypatch.setenv("KGP_CKPT_LEVEL", "ser")
+    assert default_reuse(0).level == "ser"
 
 
 def test_adaptive_ckpt_level_thresholds(monkeypatch):
-    """The local profile picks the pin storage level from input bytes:
-    deserialized below KGP_CKPT_SER_MB, serialized UnsafeRow between the
-    thresholds, DISK_ONLY above KGP_CKPT_DISK_MB (the sf16 jstack probe
-    caught single-threaded MemoryStore eviction stalling all cores when
-    big pins sat in the storage pool — SCALING.md round-5)."""
-    from kgp.reuse import local_reuse_for
-
-    monkeypatch.delenv("KGP_CKPT_SER", raising=False)
+    """Above the serialized tier the default hook moves pins to DISK_ONLY:
+    serialized UnsafeRow up to DISK_BYTES, DISK_ONLY above (the sf16
+    jstack probe caught single-threaded MemoryStore eviction stalling all
+    cores when big pins sat in the storage pool — SCALING.md round-5).
+    KGP_CKPT_LEVEL overrides the choice."""
     monkeypatch.delenv("KGP_CKPT_LEVEL", raising=False)
-    assert not hasattr(local_reuse_for(10e6), "level")  # deserialized
-    assert local_reuse_for(40e6).level == "ser"
-    assert local_reuse_for(150e6).level == "disk"
+    assert default_reuse(DISK_BYTES).level == "ser"
+    assert default_reuse(DISK_BYTES + 1).level == "disk"
     monkeypatch.setenv("KGP_CKPT_LEVEL", "ser")
-    assert local_reuse_for(150e6).level == "ser"  # explicit override wins
+    assert default_reuse(DISK_BYTES + 1).level == "ser"  # explicit override wins
+    monkeypatch.setenv("KGP_CKPT_LEVEL", "deser")
+    assert default_reuse(DISK_BYTES + 1).level == "deser"
+
+
+def test_adaptive_ckpt_pipeline_equivalence(spark, monkeypatch):
+    """The pin storage level is a pure storage-format choice: identical
+    pipeline outputs at every level."""
+    rows = make_transcripts(FX)
+    t = spark.createDataFrame(rows, schema=TRANSCRIPT_SCHEMA)
+    model = fixture_model(spark, FX)
+    snaps = {}
+    for level in ("deser", "ser", "disk"):
+        monkeypatch.setenv("KGP_CKPT_LEVEL", level)
+        snaps[level] = _snap(run_pipeline(spark, t, model))
+    assert snaps["ser"] == snaps["deser"]
+    assert snaps["disk"] == snaps["deser"]

@@ -80,6 +80,16 @@ def test_read_excel_dict_matches_csv_twin(spark):
     assert got == want and len(got) == 50
 
 
+def test_read_xlsx_empty_workbooks(spark):
+    """A batch of empty workbooks is zero rows, not an Arrow conversion crash."""
+    from kgp.io.xlsx import read_xlsx, write_xlsx
+
+    with tempfile.TemporaryDirectory() as d:
+        for i in range(3):
+            write_xlsx(os.path.join(d, f"empty{i}.xlsx"), [])
+        assert read_xlsx(spark, d).count() == 0
+
+
 # ---------------------------------------------------------------------------
 # J9: negative sampling
 # ---------------------------------------------------------------------------

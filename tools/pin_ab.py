@@ -1,15 +1,16 @@
 """Same-host A/B of the checkpoint-pin storage policy at sf4 (round-5).
 
-The r5 scale-adaptive policy (kgp/reuse.py:local_reuse_for) switches the
+The r5 scale-adaptive policy (kgp/reuse.py:default_reuse) switches the
 pipeline's multi-consumer pins to serialized UnsafeRow blocks above
-KGP_CKPT_SER_MB (default 32 MB) of input parquet. sf16 measured -23% on
+SER_BYTES (32 MB) of input parquet. sf16 measured -23% on
 the 4-core leg from that switch, but the HEAD sf4 campaign
 (BENCH/scaling_run.json @ 6516339) regressed BOTH legs vs the r4
 deserialized-pin campaign (4652729): best 1-core 266.2 vs 241.9 s, best
 4-core 86.1 vs 70.6 s. sf4's input (36 MB) sits just above the 32 MB
 threshold, so the policy flipped it to serialized — this script measures
-whether that flip is the cause, alternating KGP_CKPT_SER=0 (deserialized,
-the r4 behavior) vs KGP_CKPT_SER=1 (what auto picks at sf4) legs on the
+whether that flip is the cause, alternating KGP_CKPT_LEVEL=deser
+(deserialized, the r4 behavior) vs KGP_CKPT_LEVEL=ser (what auto picks at
+sf4) legs on the
 same host, calm-window gated, pinned via taskset like scaling_bench.
 
 Writes BENCH/pin_ab_sf4.json.
@@ -27,13 +28,13 @@ sys.path.insert(0, os.path.join(REPO, "tools"))
 from scaling_bench import _git_sha, cpu_times, loadavg, wait_for_calm  # noqa: E402
 
 
-def run_leg(ser: str, cpus: int, sf_dir: str) -> dict:
+def run_leg(level: str, cpus: int, sf_dir: str) -> dict:
     env = dict(
         os.environ,
         SPARK_GRAFT_CPUS=str(cpus),
         SPARK_GRAFT_SF_DIR=sf_dir,
         BENCH_PIPELINE_ONLY="1",
-        KGP_CKPT_SER=ser,
+        KGP_CKPT_LEVEL=level,
     )
     cmd = [sys.executable, os.path.join(REPO, "bench.py")]
     cmd = ["taskset", "-c", f"0-{cpus - 1}" if cpus > 1 else "0"] + cmd
@@ -44,10 +45,10 @@ def run_leg(ser: str, cpus: int, sf_dir: str) -> dict:
     t1, s1 = cpu_times()
     lines = [l for l in out.stdout.strip().splitlines() if l.startswith("{")]
     if not lines:
-        return {"ser": ser, "cpus": cpus, "error": out.stderr.strip().splitlines()[-5:]}
+        return {"level": level, "cpus": cpus, "error": out.stderr.strip().splitlines()[-5:]}
     r = json.loads(lines[-1])
     leg = {
-        "ser": ser,
+        "level": level,
         "cpus": cpus,
         "e2e_sec": r["queries"]["kg_pipeline_e2e"],
         "loadavg": load,
@@ -65,18 +66,18 @@ def main() -> None:
     legs = []
     for _ in range(rounds):
         for cpus in cpu_levels:
-            for ser in ("0", "1"):  # alternate within a round: contention hits both arms
-                legs.append(run_leg(ser, cpus, sf_dir))
+            for level in ("deser", "ser"):  # alternate within a round: contention hits both arms
+                legs.append(run_leg(level, cpus, sf_dir))
                 with open(os.path.join(REPO, "BENCH", "pin_ab_sf4.json"), "w") as f:
                     json.dump({"sf": sf_dir, "legs": legs}, f, indent=1)
-    # summary: best per (cpus, ser) arm
+    # summary: best per (cpus, level) arm
     best: dict[tuple[int, str], float] = {}
     for l in legs:
         if "e2e_sec" not in l:
             continue
-        k = (l["cpus"], l["ser"])
+        k = (l["cpus"], l["level"])
         best[k] = min(best.get(k, 1e18), l["e2e_sec"])
-    summary = {f"cpus{c}_ser{s}": v for (c, s), v in sorted(best.items())}
+    summary = {f"cpus{c}_{lv}": v for (c, lv), v in sorted(best.items())}
     with open(os.path.join(REPO, "BENCH", "pin_ab_sf4.json"), "w") as f:
         json.dump({"sf": sf_dir, "legs": legs, "best": summary}, f, indent=1)
     print(json.dumps(summary))
