@@ -4,20 +4,21 @@ All variants are pure DataFrame dataflow designed for the 100 TB regime:
 
 - :func:`exact_dedup` — hash-groupBy on the full text; one shuffle, keeps
   the smallest doc_id per group (deterministic survivor).
-- :func:`ngram_jaccard_pairs` — word n-gram shingle join; candidate pairs
-  share >=1 shingle, Jaccard computed from distinct-shingle counts. The
-  shingle join is the classic inverted-index self-join: work is bounded by
-  shingle posting-list sizes, not |docs|².
-- :func:`minhash_lsh_pairs` — MinHash signatures + LSH banding: per-doc
-  signature of K minima over universal-hash permutations of shingle
-  hashes, banded into B groups; a single groupBy on (band, band_signature)
-  produces candidate buckets and a self-join within buckets yields pairs.
-  At scale this replaces the quadratic shingle join: candidates are only
-  pairs agreeing on a full band.
+- :func:`block_pairs` — the one candidate-pair (blocking) primitive:
+  purge blocks larger than a cap, then self-join rows within a block.
+  Every pair generator below is keys + :func:`block_pairs` + scoring.
+- :func:`ngram_jaccard_pairs` — blocks on word n-gram shingles (the
+  classic inverted-index self-join: work is bounded by shingle
+  posting-list sizes, not |docs|²); Jaccard from distinct-shingle counts.
+- :func:`minhash_lsh_pairs` — blocks on LSH bands of a MinHash signature
+  (K minima over universal-hash permutations of shingle hashes, banded
+  into B groups): candidates are only pairs agreeing on a full band.
+- :func:`embedding_cosine_dups` — blocks on hyperplane-LSH buckets
+  (:func:`kgp.ops.similarity.lsh_keys`), rescored by exact cosine.
 - :func:`simhash60` — 60-bit SimHash per document (bitwise majority over
   token hashes; 60 bits = the md5 15-hex-digit prefix both engines can
-  compute identically). Near-dups differ in few bits; a Hamming-band join
-  is 4x15-bit chunk equality (any chunk equal -> candidate).
+  compute identically). It emits fingerprints only; no pair join is
+  built on them.
 
 Shingle/token hashes use md5-prefix integers (``conv(substr(md5(g),1,15),
 16,10)``) — chosen because the SAME value is computable in ANSI SQL
@@ -128,6 +129,39 @@ def run_dedup_resumable(
     return log.run_stage(spark, f"dedup_{method}_pairs", fingerprint, build, bucket_on=None)
 
 
+def block_pairs(
+    keyed: DataFrame, keys: list, id_col: str, max_block: int | None = None, on_drop=None
+) -> DataFrame:
+    """Candidate pairs of rows sharing a block: self-join on ``keys``.
+
+    Every non-key column ``c`` comes out twice, as ``a_c`` and ``b_c``,
+    with ``a_<id_col> < b_<id_col>``; the key columns come out once. A pair
+    sharing several blocks appears once per block; a null key never pairs.
+
+    ``max_block`` purges blocks of more than that many rows before the
+    join: a block of B rows alone yields B²/2 pairs in one join key. Pass
+    ``None`` to keep every block. The purge is never silent:
+    ``on_drop(n_purged_blocks)`` is called whenever a callable is given,
+    0 included (one small extra job when ``max_block`` is set).
+    """
+    if max_block is not None:
+        big = (
+            keyed.groupBy(*keys)
+            .agg(F.count("*").alias("_n"))
+            .where(F.col("_n") > max_block)
+            .select(*keys)
+        )
+        if on_drop is not None:
+            on_drop(big.count())
+        keyed = keyed.join(big, keys, "left_anti")
+    elif on_drop is not None:
+        on_drop(0)
+    rest = [c for c in keyed.columns if c not in keys]
+    a = keyed.select(*keys, *[F.col(c).alias(f"a_{c}") for c in rest])
+    b = keyed.select(*keys, *[F.col(c).alias(f"b_{c}") for c in rest])
+    return a.join(b, keys).where(F.col(f"a_{id_col}") < F.col(f"b_{id_col}"))
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     n: int = 3,
@@ -139,43 +173,30 @@ def ngram_jaccard_pairs(
 ) -> DataFrame:
     """Candidate near-dup pairs (doc_a < doc_b) with shingle Jaccard >= threshold.
 
-    ``max_shingle_df`` caps the posting-list self-join: a shingle appearing
-    in more than that many documents (a stop-shingle like "the quick
-    brown") would alone produce a quadratic candidate set inside one join
-    key, so such shingles are dropped from CANDIDATE GENERATION (the join),
-    not from the Jaccard denominators — overlap counts for pairs sharing a
-    dropped shingle undercount by at most the number of shared hot
-    shingles, i.e. the cap is conservative (it can only miss borderline
-    pairs, never invent them). Pass ``None`` to disable. The cap is never
-    silent: ``on_drop(n_hot_shingles)`` is invoked (one small extra job)
-    whenever a callable is supplied; callers that must account for drops
-    in lineage pass their metrics hook here.
+    ``max_shingle_df`` is the :func:`block_pairs` cap on the posting-list
+    self-join: a shingle appearing in more than that many documents (a
+    stop-shingle like "the quick brown") would alone produce a quadratic
+    candidate set inside one join key, so such shingles are dropped from
+    CANDIDATE GENERATION (the join), not from the Jaccard denominators —
+    overlap counts for pairs sharing a dropped shingle undercount by at
+    most the number of shared hot shingles, i.e. the cap is conservative
+    (it can only miss borderline pairs, never invent them). Pass ``None``
+    to disable. The cap is never silent: ``on_drop(n_hot_shingles)`` is
+    invoked whenever a callable is supplied; callers that must account
+    for drops in lineage pass their metrics hook here.
     """
     sh = word_shingles(df, text_col, n).withColumn("n_sh", F.size("shingles"))
     # both sides of the self-join read this; the reuse point makes
     # shingling run once, not once per side (default: localCheckpoint,
     # single-box only — see _lazy_checkpoint / run_dedup_resumable)
     ex = reuse(sh.select("doc_id", "n_sh", F.explode("shingles").alias("g")))
-    if max_shingle_df is not None:
-        hot = (
-            ex.groupBy("g")
-            .agg(F.count("*").alias("_df"))
-            .where(F.col("_df") > max_shingle_df)
-            .select("g")
-        )
-        if on_drop is not None:
-            on_drop(hot.count())
-        ex = ex.join(hot, "g", "left_anti")
-    a = ex.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"), "g")
-    b = ex.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"), "g")
     return (
-        a.join(b, "g")
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b", "n_a", "n_b")
+        block_pairs(ex, ["g"], "doc_id", max_shingle_df, on_drop)
+        .groupBy("a_doc_id", "b_doc_id", "a_n_sh", "b_n_sh")
         .agg(F.count("*").alias("ov"))
-        .withColumn("jaccard", F.col("ov") / (F.col("n_a") + F.col("n_b") - F.col("ov")))
+        .withColumn("jaccard", F.col("ov") / (F.col("a_n_sh") + F.col("b_n_sh") - F.col("ov")))
         .where(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
+        .select(F.col("a_doc_id").alias("doc_a"), F.col("b_doc_id").alias("doc_b"), "jaccard")
     )
 
 
@@ -210,9 +231,10 @@ def minhash_lsh_pairs(
     """Candidate pairs agreeing on at least one full LSH band.
 
     signature length k split into ``bands`` rows of k/bands; bucket key =
-    (band_idx, band slice). Output: distinct (doc_a < doc_b).
+    (band_idx, band slice). Output: distinct (doc_a < doc_b). A document
+    without shingles (null text) has no signature and no band keys.
 
-    ``max_bucket_size`` bounds the within-bucket self-join: an adversarial
+    ``max_bucket_size`` is the :func:`block_pairs` cap: an adversarial
     bucket of B docs yields B²/2 candidates in ONE task's join key, so
     buckets larger than the cap are skipped entirely (their members were
     going to be caught by a different, smaller band bucket if genuinely
@@ -222,7 +244,8 @@ def minhash_lsh_pairs(
     """
     assert k % bands == 0
     r = k // bands
-    sig = minhash_signatures(df, k, n, text_col)
+    # an all-null signature would band to key '' in every band
+    sig = minhash_signatures(df, k, n, text_col).where(F.col("sig")[0].isNotNull())
     banded = sig.select(
         "doc_id",
         F.explode(
@@ -246,22 +269,9 @@ def minhash_lsh_pairs(
     # signature computation run once (default: localCheckpoint,
     # single-box only — see _lazy_checkpoint / run_dedup_resumable)
     banded = reuse(banded)
-    if max_bucket_size is not None:
-        big = (
-            banded.groupBy("band", "key")
-            .agg(F.count("*").alias("_n"))
-            .where(F.col("_n") > max_bucket_size)
-            .select("band", "key")
-        )
-        if on_drop is not None:
-            on_drop(big.count())
-        banded = banded.join(big, ["band", "key"], "left_anti")
-    a = banded.select("band", "key", F.col("doc_id").alias("doc_a"))
-    b = banded.select("band", "key", F.col("doc_id").alias("doc_b"))
     return (
-        a.join(b, ["band", "key"])
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
+        block_pairs(banded, ["band", "key"], "doc_id", max_bucket_size, on_drop)
+        .select(F.col("a_doc_id").alias("doc_a"), F.col("b_doc_id").alias("doc_b"))
         .distinct()
     )
 
@@ -323,48 +333,29 @@ def embedding_cosine_dups(
       cross-product explosion by construction.
     - ``lsh_planes > 0`` (the DEFAULT; planes=6/tables=4/seed=42 is the
       exact configuration the ``dedup_embedding_lsh`` driver query
-      certifies against its SQL twin — defaults and certified config are
-      deliberately the same values. NOTE: the default flipped from
-      exact-all-pairs to LSH in round 2; callers needing the exact
-      baseline must opt in with ``lsh_planes=0``) — hyperplane-LSH
-      blocking (same sign-pattern
-      bucketing as kgp.ops.similarity.cosine_topk_lsh): pairs are only
-      compared within a shared bucket of one of ``lsh_tables`` independent
-      tables, an equi-join on the bucket id. Near-identical vectors
-      collide with probability (1 - theta/pi)^planes per table; recall is
-      tunable via planes/tables. This is the 100 TB path.
+      certifies against its SQL twin) — hyperplane-LSH blocking: each
+      vector gets one ``(t, bucket)`` key per table
+      (:func:`kgp.ops.similarity.lsh_keys`, shared with ``cosine_topk_lsh``)
+      and :func:`block_pairs` compares only vectors sharing a key, with
+      no block cap. Near-identical vectors collide with probability
+      (1 - theta/pi)^planes per table; recall is tunable via
+      planes/tables. This is the 100 TB path.
 
     Dot products accumulate as double in array order — bit-identical to
     the DuckDB oracle's list_transform/list_aggregate formulation.
     """
-    from kgp.ops.similarity import _bucket_expr, _dot, _hyperplanes, _norm
+    from kgp.ops.similarity import cosine, lsh_keys
 
-    a = emb.select(F.col(id_col).alias("a_id"), F.col(vec_col).alias("a_emb"))
-    b = emb.select(F.col(id_col).alias("b_id"), F.col(vec_col).alias("b_emb"))
+    vecs = emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("emb"))
     if lsh_planes > 0:
-        tables = [_hyperplanes(dim, lsh_planes, seed + t) for t in range(lsh_tables)]
-        at = a.select(
-            "*", *[_bucket_expr(F.col("a_emb"), tables[t]).alias(f"k{t}") for t in range(lsh_tables)]
-        )
-        bt = b.select(
-            "*", *[_bucket_expr(F.col("b_emb"), tables[t]).alias(f"k{t}") for t in range(lsh_tables)]
-        )
-        cand = None
-        for t in range(lsh_tables):
-            c = at.join(bt, at[f"k{t}"] == bt[f"k{t}"]).select("a_id", "a_emb", "b_id", "b_emb")
-            cand = c if cand is None else cand.unionByName(c)
-        pairs = cand.where(F.col("a_id") < F.col("b_id")).dropDuplicates(["a_id", "b_id"])
+        keys = F.inline(lsh_keys("emb", dim, lsh_planes, lsh_tables, seed))
+        pairs = block_pairs(vecs.select("*", keys), ["t", "bucket"], "id")
+        pairs = pairs.dropDuplicates(["a_id", "b_id"])
     else:
+        a = vecs.select(F.col("id").alias("a_id"), F.col("emb").alias("a_emb"))
+        b = vecs.select(F.col("id").alias("b_id"), F.col("emb").alias("b_emb"))
         pairs = a.join(F.broadcast(b), F.col("a_id") < F.col("b_id"))
     return (
-        pairs.select(
-            "a_id",
-            "b_id",
-            (
-                _dot(F.col("a_emb"), F.col("b_emb"))
-                / (_norm("a_emb") * _norm("b_emb"))
-            ).alias("cos"),
-        )
+        pairs.select("a_id", "b_id", cosine("a_emb", "b_emb").alias("cos"))
         .where(F.col("cos") >= threshold)
-        .select("a_id", "b_id", "cos")
     )

@@ -9,7 +9,8 @@
   is bucketed by the sign pattern of ``n_planes`` fixed pseudo-random
   hyperplanes (deterministic from a seed, generated driver-side);
   candidates are items sharing a bucket with the query under any of
-  ``n_tables`` independent tables; exact rescoring only within candidates.
+  ``n_tables`` independent tables (:func:`lsh_keys`, one equi-join on
+  ``(t, bucket)``); exact rescoring only within candidates.
   Recall < 1 by design; tested against brute force for recall >= target.
 
 - :func:`ivf_topk` — IVF-style variant: k-means-lite centroids chosen
@@ -46,20 +47,23 @@ def _norm(a):
     )
 
 
+def cosine(a, b):
+    """Cosine similarity of two vector columns (double accumulation)."""
+    return _dot(a, b) / (_norm(a) * _norm(b))
+
+
+def _topk(scored: DataFrame, k: int) -> DataFrame:
+    """Per query, the k best ``cos`` (ties -> lowest vec_id), ranked from 1."""
+    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("vec_id"))
+    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+
+
 def cosine_topk_bruteforce(
     items: DataFrame, queries: DataFrame, k: int = 10
 ) -> DataFrame:
     """items(vec_id, embedding), queries(q_id, q_emb) -> (q_id, vec_id, cos, rank)."""
     j = items.crossJoin(F.broadcast(queries))
-    scored = j.select(
-        "q_id",
-        "vec_id",
-        (_dot(F.col("embedding"), F.col("q_emb")) / (_norm("embedding") * _norm("q_emb"))).alias(
-            "cos"
-        ),
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+    return _topk(j.select("q_id", "vec_id", cosine("embedding", "q_emb").alias("cos")), k)
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int) -> np.ndarray:
@@ -67,13 +71,20 @@ def _hyperplanes(dim: int, n_planes: int, seed: int) -> np.ndarray:
     return rng.standard_normal((n_planes, dim))
 
 
-def _bucket_expr(col, planes: np.ndarray):
-    """Sign-pattern bucket id of a vector column under fixed hyperplanes."""
-    bits = []
-    for j, p in enumerate(planes):
-        arr = F.array(*[F.lit(float(v)) for v in p])
-        bits.append(F.when(_dot(col, arr) >= 0, F.lit(1 << j)).otherwise(F.lit(0)))
-    return sum(bits[1:], bits[0])
+def lsh_keys(col, dim: int, n_planes: int, n_tables: int, seed: int):
+    """``array<struct<t, bucket>>``: per table ``t`` the sign pattern of
+    the vector under ``n_planes`` hyperplanes seeded ``seed + t``. Explode
+    it and equi-join on ``(t, bucket)``: rows sharing a bucket in any
+    table are candidates."""
+    keys = []
+    for t in range(n_tables):
+        bits = [
+            F.when(_dot(col, F.array(*[F.lit(float(v)) for v in p])) >= 0, F.lit(1 << j))
+            .otherwise(F.lit(0))
+            for j, p in enumerate(_hyperplanes(dim, n_planes, seed + t))
+        ]
+        keys.append(F.struct(F.lit(t).alias("t"), sum(bits[1:], bits[0]).alias("bucket")))
+    return F.array(*keys)
 
 
 def cosine_topk_lsh(
@@ -86,33 +97,11 @@ def cosine_topk_lsh(
     seed: int = 42,
 ) -> DataFrame:
     """Approximate top-k: hyperplane-LSH candidate join + exact rescore."""
-    tables = [_hyperplanes(dim, n_planes, seed + t) for t in range(n_tables)]
-    it = items.select(
-        "vec_id",
-        "embedding",
-        *[_bucket_expr(F.col("embedding"), tables[t]).alias(f"b{t}") for t in range(n_tables)],
-    )
-    qt = queries.select(
-        "q_id",
-        "q_emb",
-        *[_bucket_expr(F.col("q_emb"), tables[t]).alias(f"qb{t}") for t in range(n_tables)],
-    )
-    cand = None
-    for t in range(n_tables):
-        c = it.join(
-            F.broadcast(qt), it[f"b{t}"] == qt[f"qb{t}"]
-        ).select("q_id", "vec_id", "embedding", "q_emb")
-        cand = c if cand is None else cand.unionByName(c)
-    cand = cand.dropDuplicates(["q_id", "vec_id"])
-    scored = cand.select(
-        "q_id",
-        "vec_id",
-        (_dot(F.col("embedding"), F.col("q_emb")) / (_norm("embedding") * _norm("q_emb"))).alias(
-            "cos"
-        ),
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+    keys = lambda emb: F.inline(lsh_keys(emb, dim, n_planes, n_tables, seed))  # noqa: E731
+    it = items.select("vec_id", "embedding", keys("embedding"))
+    qt = queries.select("q_id", "q_emb", keys("q_emb"))
+    cand = it.join(F.broadcast(qt), ["t", "bucket"]).dropDuplicates(["q_id", "vec_id"])
+    return _topk(cand.select("q_id", "vec_id", cosine("embedding", "q_emb").alias("cos")), k)
 
 
 def _assign_nearest(items: DataFrame, cents: DataFrame) -> DataFrame:
@@ -124,8 +113,7 @@ def _assign_nearest(items: DataFrame, cents: DataFrame) -> DataFrame:
             "vec_id",
             "embedding",
             "c_id",
-            (_dot(F.col("embedding"), F.col("c_emb"))
-             / (_norm("embedding") * _norm("c_emb"))).alias("sim"),
+            cosine("embedding", "c_emb").alias("sim"),
         )
         .withColumn("rk", F.row_number().over(assign_w))
         .where(F.col("rk") == 1)
@@ -189,19 +177,11 @@ def ivf_topk(
             "q_id",
             "q_emb",
             "c_id",
-            (_dot(F.col("q_emb"), F.col("c_emb")) / (_norm("q_emb") * _norm("c_emb"))).alias("sim"),
+            cosine("q_emb", "c_emb").alias("sim"),
         )
         .withColumn("rk", F.row_number().over(probe_w))
         .where(F.col("rk") <= nprobe)
         .select("q_id", "q_emb", "c_id")
     )
     cand = assigned.join(probes, "c_id")
-    scored = cand.select(
-        "q_id",
-        "vec_id",
-        (_dot(F.col("embedding"), F.col("q_emb")) / (_norm("embedding") * _norm("q_emb"))).alias(
-            "cos"
-        ),
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+    return _topk(cand.select("q_id", "vec_id", cosine("embedding", "q_emb").alias("cos")), k)

@@ -105,7 +105,7 @@ def build_alias_artifacts(
     exact rational — ranking can't drift with float summation order
     between engine and oracle.
 
-    STOP-GRAM CAP (mirrors ``kgp.ops.dedup.max_shingle_df`` semantics): a
+    STOP-GRAM CAP (mirrors the block purge of ``kgp.ops.dedup.block_pairs``): a
     gram at the IDF floor (w == 1, i.e. present in >= 2^15 distinct
     aliases) is dropped from CANDIDATE GENERATION — its posting list
     multiplies the recall join's rows by its document frequency while

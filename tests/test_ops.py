@@ -352,3 +352,63 @@ def test_run_dedup_resumable_matches_and_resumes(spark, docs, tmp_path):
         again = run_dedup_resumable(spark, docs, out, method=method, **kw)
         assert again.count() == len(want)
         assert os.path.getmtime(manifest) == m0
+
+
+def test_block_pairs_boundaries(spark):
+    """The purge keeps a block of exactly ``max_block`` rows and drops one
+    of ``max_block + 1``; ``on_drop`` always reports, 0 included; a pair
+    sharing two blocks comes out once per block; a null key never pairs."""
+    from kgp.ops.dedup import block_pairs
+
+    rows = [(i, "three", "x") for i in (1, 2, 3)]
+    rows += [(i, "four", "x") for i in (10, 11, 12, 13)]
+    rows += [(20, "p", "x"), (21, "p", "x"), (20, "q", "x"), (21, "q", "x")]
+    rows += [(30, None, "x"), (31, None, "x"), (40, "r", None), (41, "r", None)]
+    keyed = spark.createDataFrame(rows, "id long, k string, k2 string")
+
+    def pairs(df):
+        return sorted((r["k"], r["a_id"], r["b_id"]) for r in df.collect())
+
+    dropped = []
+    capped = block_pairs(keyed, ["k", "k2"], "id", max_block=3, on_drop=dropped.append)
+    assert sorted(capped.columns) == ["a_id", "b_id", "k", "k2"]
+    assert dropped == [1]
+    assert pairs(capped) == [
+        ("p", 20, 21), ("q", 20, 21), ("three", 1, 2), ("three", 1, 3), ("three", 2, 3),
+    ]
+
+    dropped = []
+    kept = block_pairs(keyed, ["k", "k2"], "id", max_block=4, on_drop=dropped.append)
+    assert dropped == [0]
+    assert len(pairs(kept)) == 5 + 6
+
+    dropped = []
+    uncapped = block_pairs(keyed, ["k", "k2"], "id", on_drop=dropped.append)
+    assert dropped == [0]
+    assert pairs(uncapped) == pairs(kept)
+
+
+def test_null_and_empty_texts_match_sql_twins(spark):
+    """Null and empty texts through the pair generators and SimHash agree
+    with the DuckDB twins: a null text has no shingles, so it neither
+    pairs with the other null text nor gets a fingerprint."""
+    import duckdb
+
+    from kgp import oracles
+    from kgp.ops.dedup import minhash_lsh_pairs, ngram_jaccard_pairs, simhash60
+    from tools.selfcheck import canon
+
+    rows = [(1, "a b c d e"), (2, "a b c d e"), (3, None), (4, ""), (5, "x"), (6, None), (7, "")]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    con = duckdb.connect()
+    con.sql("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+
+    for got, sql in (
+        (ngram_jaccard_pairs(docs, n=3, threshold=0.5), oracles.ngram_jaccard_sql(3, 0.5)),
+        (minhash_lsh_pairs(docs, k=16, bands=4, n=3), oracles.minhash_lsh_sql(16, 4, 3)),
+        (simhash60(docs), oracles.simhash_sql()),
+    ):
+        res = con.sql(sql)
+        want = canon(res.fetchall(), [d[0] for d in res.description])
+        assert canon([tuple(r) for r in got.collect()], got.columns) == want, sql
