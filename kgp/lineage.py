@@ -6,12 +6,15 @@ same contract is implemented over a directory layout:
 
     <root>/<stage>/data/...            partitioned parquet (the stage table)
     <root>/_lineage/<stage>.json       manifest: per-partition rows/bytes,
-                                       wall time, input fingerprint, status
+                                       wall time, input fingerprint, status,
+                                       table schema
 
 A stage runs as ``run_stage(name, build_fn)``:
 
-- if the manifest records status=ok for the same input fingerprint, the
-  stage is **skipped** and its output is read back (resume path);
+- if the manifest records status=ok and a table schema for the same input
+  fingerprint, the stage is **skipped** and its output is read back with
+  that schema (resume path; a bucketed stage with zero rows writes no part
+  file, so the schema cannot be inferred from the data);
 - otherwise bucketed stages commit at BUCKET granularity: every bucket
   directory has a progress entry (``<stage>.buckets.json``) keyed by the
   input fingerprint, dirty buckets are rewritten with dynamic partition
@@ -35,6 +38,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 
 def _bucket_col(n_buckets: int):
@@ -60,7 +64,8 @@ class LineageLog:
 
     def is_done(self, stage: str, input_fingerprint: str) -> bool:
         m = self.read_manifest(stage)
-        return bool(m and m.get("status") == "ok" and m.get("input") == input_fingerprint)
+        ok = m and m.get("status") == "ok" and m.get("input") == input_fingerprint
+        return bool(ok and "schema" in m)
 
     def data_path(self, stage: str) -> str:
         return os.path.join(self.root, stage, "data")
@@ -107,24 +112,28 @@ class LineageLog:
         """
         out = self.data_path(stage)
         if self.is_done(stage, input_fingerprint):
-            return spark.read.parquet(out)
+            schema = StructType.fromJson(self.read_manifest(stage)["schema"])
+            return spark.read.schema(schema).parquet(out)
         t0 = time.time()
         df = build_fn()
         if bucket_on is not None and bucket_on in df.columns:
-            part_metrics = self._run_bucketed(spark, stage, input_fingerprint, df, bucket_on)
+            schema = StructType(df.schema.fields + [StructField("bucket", IntegerType())])
+            part_metrics = self._run_bucketed(spark, stage, input_fingerprint, df, bucket_on, schema)
             rows = sum(p["rows_out"] for p in part_metrics)
         else:
+            schema = df.schema
             tmp = out + ".tmp"
             shutil.rmtree(tmp, ignore_errors=True)
             shutil.rmtree(out, ignore_errors=True)
             df.write.mode("overwrite").parquet(tmp)
-            rows = spark.read.parquet(tmp).count()
+            rows = spark.read.schema(schema).parquet(tmp).count()
             os.rename(tmp, out)
             part_metrics = []
         manifest = {
             "stage": stage,
             "status": "ok",
             "input": input_fingerprint,
+            "schema": schema.jsonValue(),
             "rows_out": rows,
             "wall_ms": int((time.time() - t0) * 1000),
             "partitions": sorted(part_metrics, key=lambda p: p["partition"]),
@@ -133,10 +142,11 @@ class LineageLog:
         with open(self._manifest_path(stage) + ".tmp", "w") as f:
             json.dump(manifest, f, indent=1)
         os.replace(self._manifest_path(stage) + ".tmp", self._manifest_path(stage))
-        return spark.read.parquet(out)
+        return spark.read.schema(schema).parquet(out)
 
     def _run_bucketed(
-        self, spark: SparkSession, stage: str, input_fingerprint: str, df: DataFrame, bucket_on: str
+        self, spark: SparkSession, stage: str, input_fingerprint: str, df: DataFrame,
+        bucket_on: str, schema: StructType,
     ) -> list:
         out = self.data_path(stage)
         progress = self.read_bucket_progress(stage)
@@ -172,7 +182,7 @@ class LineageLog:
             ).partitionBy("bucket").parquet(out)
             counts = {
                 int(r["bucket"]): int(r["n"])
-                for r in spark.read.parquet(out)
+                for r in spark.read.schema(schema).parquet(out)
                 .where(F.col("bucket").isin([int(b) for b in dirty]))
                 .groupBy("bucket")
                 .agg(F.count("*").alias("n"))

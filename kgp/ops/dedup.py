@@ -75,14 +75,14 @@ def exact_dedup(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.groupBy(text_col).agg(F.min("doc_id").alias("doc_id")).select("doc_id", text_col)
 
 
-def _lazy_checkpoint(df: DataFrame) -> DataFrame:
+def _lazy_checkpoint(df: DataFrame, name: str | None = None) -> DataFrame:
     """Default multi-consumer reuse point: lazy localCheckpoint.
 
     SINGLE-BOX ASSUMPTION: local checkpoints live in executor block
     storage and are NOT fault-tolerant on executor loss — fine in
-    local[N] (one JVM), wrong on a real cluster. Cluster callers pass a
-    stage-table ``reuse`` instead (see :func:`run_dedup_resumable`),
-    which persists the intermediate through the lineage runner and is
+    local[N] (one JVM), wrong on a real cluster. Cluster callers pass
+    :func:`kgp.reuse.lineage_reuse` instead (as :func:`run_dedup_resumable`
+    does), which persists the intermediate as a stage table and is
     resumable mid-run."""
     return df.localCheckpoint(eager=False)
 
@@ -96,37 +96,29 @@ def run_dedup_resumable(
     **kw,
 ):
     """Cluster-mode dedup entry: runs :func:`ngram_jaccard_pairs` /
-    :func:`minhash_lsh_pairs` with their self-joined intermediate
-    (shingle posting list / banded signatures) persisted as a LineageLog
-    stage TABLE instead of a localCheckpoint — executor-loss safe, and a
-    crashed run resumes past the (expensive) shingling/signature pass.
-    The final pair table is itself committed as a stage, so a finished
-    dedup is a no-op on re-run.
+    :func:`minhash_lsh_pairs` under :func:`kgp.reuse.lineage_reuse`, so
+    their self-joined intermediate (``ngram_posting`` / ``minhash_banded``)
+    is a stage TABLE instead of a localCheckpoint — executor-loss safe,
+    and a crashed run resumes past the (expensive) shingling/signature
+    pass. The final pair table is itself committed as a stage, so a
+    finished dedup only reads it back on re-run: the op is not planned
+    again and its ``on_drop`` does not fire. The fingerprint covers
+    ``kw``: changed parameters never resume stale tables.
     """
     import hashlib
 
-    from kgp.lineage import LineageLog
-    from kgp.reuse import content_fingerprint
+    from kgp.reuse import content_fingerprint, lineage_reuse
 
-    log = LineageLog(outdir, n_buckets=16)
-    if fingerprint is None:
-        fingerprint = content_fingerprint(df)
-    fingerprint += ":" + hashlib.md5(repr(sorted(kw.items())).encode()).hexdigest()[:8]
-
-    def stage_reuse(name):
-        return lambda d: log.run_stage(spark, name, fingerprint, lambda: d, bucket_on=None)
-
-    if method == "minhash":
-        build = lambda: minhash_lsh_pairs(  # noqa: E731
-            df, reuse=stage_reuse("minhash_banded"), **kw
-        )
-    elif method == "ngram":
-        build = lambda: ngram_jaccard_pairs(  # noqa: E731
-            df, reuse=stage_reuse("ngram_posting"), **kw
-        )
-    else:
+    ops = {"minhash": minhash_lsh_pairs, "ngram": ngram_jaccard_pairs}
+    if method not in ops:
         raise ValueError(f"unknown dedup method {method!r}")
-    return log.run_stage(spark, f"dedup_{method}_pairs", fingerprint, build, bucket_on=None)
+    fp = fingerprint or content_fingerprint(df)
+    fp += ":" + hashlib.md5(repr(sorted(kw.items())).encode()).hexdigest()[:8]
+    reuse = lineage_reuse(spark, outdir, fp, bucket_on=None)
+    name = f"dedup_{method}_pairs"
+    if reuse.lineage.is_done(name, fp):
+        return reuse.lineage.run_stage(spark, name, fp, None, bucket_on=None)
+    return reuse(ops[method](df, reuse=reuse, **kw), name)
 
 
 def block_pairs(
@@ -187,9 +179,9 @@ def ngram_jaccard_pairs(
     """
     sh = word_shingles(df, text_col, n).withColumn("n_sh", F.size("shingles"))
     # both sides of the self-join read this; the reuse point makes
-    # shingling run once, not once per side (default: localCheckpoint,
-    # single-box only — see _lazy_checkpoint / run_dedup_resumable)
-    ex = reuse(sh.select("doc_id", "n_sh", F.explode("shingles").alias("g")))
+    # shingling run once, not once per side (default: lazy localCheckpoint,
+    # single-box only — see _lazy_checkpoint)
+    ex = reuse(sh.select("doc_id", "n_sh", F.explode("shingles").alias("g")), "ngram_posting")
     return (
         block_pairs(ex, ["g"], "doc_id", max_shingle_df, on_drop)
         .groupBy("a_doc_id", "b_doc_id", "a_n_sh", "b_n_sh")
@@ -266,9 +258,9 @@ def minhash_lsh_pairs(
         ).alias("bk"),
     ).select("doc_id", "bk.band", "bk.key")
     # self-joined below — the reuse point makes the K-permutation
-    # signature computation run once (default: localCheckpoint,
-    # single-box only — see _lazy_checkpoint / run_dedup_resumable)
-    banded = reuse(banded)
+    # signature computation run once (default: lazy localCheckpoint,
+    # single-box only — see _lazy_checkpoint)
+    banded = reuse(banded, "minhash_banded")
     return (
         block_pairs(banded, ["band", "key"], "doc_id", max_bucket_size, on_drop)
         .select(F.col("a_doc_id").alias("doc_a"), F.col("b_doc_id").alias("doc_b"))

@@ -7,7 +7,10 @@ must be materialized exactly once, and the downstream plans must read
 the materialized form (plan truncation keeps Catalyst analysis time flat
 as the pipeline deepens).
 
-Two interchangeable implementations, both ``(df, name) -> DataFrame``:
+Every reuse hook in kgp is ``(df, name) -> DataFrame``, and every call
+site names its reuse point (``tagged``, ``alias_posting``,
+``cf_layer_1``, ``ngram_posting``, ...). Two interchangeable
+implementations:
 
 - :func:`default_reuse` — eager ``localCheckpoint`` whose storage level
   adapts to the input size. Fastest on a single box, but blocks live in
@@ -20,9 +23,10 @@ Two interchangeable implementations, both ``(df, name) -> DataFrame``:
   per-partition manifest, the sandbox analogue of Iceberg
   ``overwritePartitions``): executor-loss safe, resumable mid-run (a
   crashed job skips completed reuse points on re-run), and the blocks
-  never touch the block manager — the cluster/resume profile, and the
-  same mechanism :func:`kgp.ops.dedup.run_dedup_resumable` already uses.
-  Callers pass it explicitly, keyed by :func:`input_fingerprint`.
+  never touch the block manager — the cluster/resume profile. Callers
+  pass it explicitly: ``run_pipeline`` keyed by :func:`input_fingerprint`,
+  :func:`kgp.ops.dedup.run_dedup_resumable` by the input's
+  :func:`content_fingerprint` and its parameters.
 """
 
 from __future__ import annotations

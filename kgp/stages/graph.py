@@ -324,45 +324,38 @@ def kgat_aggregate(
     embedding table (a node with no out-edges aggregates e_N = 0, like an
     empty adjacency row in the reference's sparse matmul).
 
-    Dataflow (all built-in expressions, zero Python in the hot path):
-    the big edge table broadcast-joins the entity-embedding dim on ``t``,
-    scales by ``att``, then posexplodes to (h, i, val) so the neighbor
-    sum is a plain groupBy(h, i) with map-side partial aggregation — a
-    high-out-degree hub costs one combiner per dimension, never one task.
-    The d_in x d_out linear maps run the same way: posexplode + broadcast
-    join against the (i, j, w1, w2) weight table + groupBy(h, j). At 100
-    TB the only shuffles are uniform (h, i)/(h, j) key aggs; embeddings
-    and weights ship once per executor as broadcasts.
+    Dataflow (all built-in expressions, zero Python in the hot path): the
+    driver-side embedding becomes the long-form table (id, i, val),
+    hinted for broadcast, and :func:`_aggregate_long` runs the round —
+    the big edge table broadcast-joins it on ``t`` (no shuffle of the
+    edges), the neighbor sum is a plain groupBy(h, i) with map-side
+    partial aggregation (a high-out-degree hub costs one combiner per
+    dimension, never one task), and the d_in x d_out linear maps join the
+    broadcast (i, j, w1, w2) weight table + groupBy(h, j). At 100 TB the
+    only shuffles are uniform (h, i)/(h, j) key aggs; embeddings and
+    weights ship once per executor as broadcasts.
     """
-    d_in = len(ent_emb[0])
-    if w2 is None:
-        w2 = [[0.0] * len(w1[0]) for _ in range(d_in)]
-    emb_rows = [(i, [float(x) for x in row]) for i, row in enumerate(ent_emb)]
-    emb_df = spark.createDataFrame(emb_rows, "id long, emb array<double>")
-    w_rows = [
-        (i, j, float(w1[i][j]), float(w2[i][j]))
-        for i in range(d_in)
-        for j in range(len(w1[0]))
-    ]
-    w_df = spark.createDataFrame(w_rows, "i int, j int, w1 double, w2 double")
-
-    msgs = (
-        edges_att.join(F.broadcast(emb_df), edges_att["t"] == emb_df["id"])
-        .select(
-            "h",
-            F.posexplode(F.transform("emb", lambda x: x * F.col("att"))).alias(
-                "i", "val"
-            ),
-        )
-        .groupBy("h", "i")
-        .agg(F.sum("val").alias("n_val"))
-    )
-    # every entity participates; missing (h, i) -> e_N[i] = 0
-    base = emb_df.select(
-        F.col("id").alias("h"), F.posexplode("emb").alias("i", "e_h")
-    )
-    out = _agg_tail(base, msgs, w_df, aggregator, alpha)
+    ego = F.broadcast(_ego_long(spark, ent_emb))
+    out = _aggregate_long(ego, edges_att, _weight_table(spark, w1, w2), alpha, aggregator)
     return out.select("h", F.col("j").cast("long").alias("j"), "e_out")
+
+
+def _ego_long(spark, ent_emb) -> DataFrame:
+    """Driver-side embedding matrix -> long form ``(id, i, val)``."""
+    rows = [(i, j, float(x)) for i, row in enumerate(ent_emb) for j, x in enumerate(row)]
+    return spark.createDataFrame(rows, "id long, i int, val double")
+
+
+def _weight_table(spark, w1, w2=None) -> DataFrame:
+    """The tiny ``(i, j, w1, w2)`` table of one round's linear maps;
+    ``w2=None`` (the gcn variant) is all zeros."""
+    d_in, d_out = len(w1), len(w1[0])
+    rows = [
+        (i, j, float(w1[i][j]), float(w2[i][j]) if w2 is not None else 0.0)
+        for i in range(d_in)
+        for j in range(d_out)
+    ]
+    return spark.createDataFrame(rows, "i int, j int, w1 double, w2 double")
 
 
 def _aggregate_long(
@@ -376,9 +369,7 @@ def _aggregate_long(
     — the stacked-layer building block of :func:`kgat_cf_embedding`
     (variant formulas: :func:`_agg_tail`; bi-interaction shown below).
 
-    Unlike :func:`kgat_aggregate` (which broadcasts a driver-side
-    embedding list, fine for one round over fixture-sized matrices), this
-    takes the embedding as a DataFrame and equi-joins it, so layer k+1
+    It takes the embedding as a DataFrame and equi-joins it, so layer k+1
     consumes layer k's output without ever collecting it: at billions of
     entities the embedding table is itself big data, and the only
     operations here are uniform-key shuffles (join on t, groupBy (h, i) /
@@ -424,29 +415,22 @@ def kgat_cf_embedding(
     lineage does not re-execute the previous layers exponentially:
     eager localCheckpoint in the single-JVM default, a LineageLog stage
     table per layer under an explicit ``reuse=lineage_reuse(...)`` (the
-    cluster profile) — exactly like the dedup ops'
-    resumable path, and free of the block-manager residency that drove
-    the sf16 driver-heap finding (SCALING.md).
+    cluster profile, as in :func:`kgp.ops.dedup.run_dedup_resumable`),
+    free of the block-manager residency that drove the sf16 driver-heap
+    finding (SCALING.md).
     L2 normalization (torch.functional.normalize eps=1e-12) is a per-h
     aggregate + an equi-join back — no windows, no driver round-trip.
     """
     if reuse is None:
         reuse = default_reuse()
-    emb_rows = [
-        (i, j, float(x)) for i, row in enumerate(ent_emb) for j, x in enumerate(row)
-    ]
-    ego = spark.createDataFrame(emb_rows, "id long, i int, val double")
+    ego = _ego_long(spark, ent_emb)
     parts = [ego.select("id", F.col("i").cast("long").alias("k"), "val")]
     offset = len(ent_emb[0])
     cur = ego
     for depth, (w1, w2) in enumerate(layers, start=1):
-        w_rows = [
-            (i, j, float(w1[i][j]), float(w2[i][j]))
-            for i in range(len(w1))
-            for j in range(len(w1[0]))
-        ]
-        w_df = spark.createDataFrame(w_rows, "i int, j int, w1 double, w2 double")
-        out = _aggregate_long(cur, edges_att, w_df, alpha=alpha, aggregator=aggregator)
+        out = _aggregate_long(
+            cur, edges_att, _weight_table(spark, w1, w2), alpha=alpha, aggregator=aggregator
+        )
         nrm = out.groupBy("h").agg(
             F.greatest(F.sqrt(F.sum(F.col("e_out") * F.col("e_out"))), F.lit(1e-12)).alias("nrm")
         )

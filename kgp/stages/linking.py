@@ -95,7 +95,7 @@ def build_alias_artifacts(
     alias_dict: DataFrame,
     cfg: PipelineConfig = DEFAULT_CONFIG,
     on_drop=None,
-    materialize: bool = False,
+    reuse=None,
 ) -> AliasArtifacts:
     """Build the linking dictionary artifacts (see :class:`AliasArtifacts`).
 
@@ -116,10 +116,11 @@ def build_alias_artifacts(
     outrank one sharing any informative gram). Never silent:
     ``on_drop(n_stop_grams)`` fires when a callable is supplied.
 
-    ``materialize=True`` eagerly localCheckpoints each artifact (alias-dim
-    sized — tiny next to the data): plan truncation for the big linking
-    query, and the build cost moves off the critical path into whatever
-    window the caller runs this in.
+    ``reuse``: a ``(df, name)`` reuse hook (:mod:`kgp.reuse`); when given,
+    the three artifacts (alias-dim sized — tiny next to the data) are
+    pinned through it as ``alias_norm``, ``alias_wtab`` and
+    ``alias_posting``: plan truncation for the big linking query, and the
+    build cost moves into whatever window the caller runs this in.
     """
     n = cfg.ngram_size
     alias_norm = alias_dict.select(F.lower(F.trim("alias")).alias("alias"), "entity_id")
@@ -139,10 +140,10 @@ def build_alias_artifacts(
         .join(F.broadcast(alias_norm), "alias")
         .join(F.broadcast(tw_a), "alias")
     )
-    if materialize:
-        alias_norm = alias_norm.localCheckpoint()
-        wtab = wtab.localCheckpoint()
-        posting = posting.localCheckpoint()
+    if reuse is not None:
+        alias_norm = reuse(alias_norm, "alias_norm")
+        wtab = reuse(wtab, "alias_wtab")
+        posting = reuse(posting, "alias_posting")
     return AliasArtifacts(alias_norm, wtab, posting)
 
 
@@ -217,16 +218,19 @@ def link_clusters(
         "cluster_id", "surface", "alias", "entity_id", "score"
     )
 
-    # --- best entity per cluster (deterministic tie-break) ---
+    return _best_links(candidates), candidates
+
+
+def _best_links(candidates: DataFrame) -> DataFrame:
+    """Best entity per cluster: argmax score, deterministic tie-break."""
     wc = Window.partitionBy("cluster_id").orderBy(
         F.desc("score"), F.asc("entity_id"), F.asc("surface"), F.asc("alias")
     )
-    links = (
+    return (
         candidates.withColumn("rk", F.row_number().over(wc))
         .where(F.col("rk") == 1)
         .select("cluster_id", "entity_id", "score")
     )
-    return links, candidates
 
 
 # surrogate-calibrated grid (the char-ngram Jaccard scorer's useful range)
@@ -248,14 +252,7 @@ def threshold_sweep(
     per θ, including θ values where nothing is predicted.
     """
     spark = candidates.sparkSession
-    wc = Window.partitionBy("cluster_id").orderBy(
-        F.desc("score"), F.asc("entity_id"), F.asc("surface"), F.asc("alias")
-    )
-    best = (
-        candidates.withColumn("rk", F.row_number().over(wc))
-        .where(F.col("rk") == 1)
-        .select("cluster_id", "entity_id", "score")
-    )
+    best = _best_links(candidates)
     th = spark.createDataFrame([(float(t),) for t in thetas], "theta double")
     gold = gold_links.select("cluster_id", F.col("entity_id").alias("g_entity"))
     pred = (

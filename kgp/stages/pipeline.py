@@ -76,6 +76,27 @@ def run_pipeline(
     cfg: PipelineConfig = DEFAULT_CONFIG,
     reuse=None,
 ) -> dict:
+    """transcripts -> every deliverable: :func:`build_triples`, then the
+    graph id jobs (:func:`kgp.stages.graph.materialize_graph`)."""
+    if reuse is None:
+        reuse = _default_reuse(input_bytes(transcripts))
+    out = build_triples(spark, transcripts, model, cfg, reuse)
+    out["edges"], out["entity_dict"], out["relation_dict"] = materialize_graph(
+        out["triples"], reuse=reuse
+    )
+    return out
+
+
+def build_triples(
+    spark: SparkSession,
+    transcripts: DataFrame,
+    model: PipelineModel,
+    cfg: PipelineConfig = DEFAULT_CONFIG,
+    reuse=None,
+) -> dict:
+    """The pipeline up to the pinned triples table — the one composition
+    :func:`run_pipeline` extends with the graph and each streaming
+    micro-batch (kgp.streaming.incremental) runs as is."""
     # Stage boundaries are materialized AND lineage-truncated through the
     # `reuse` hook (kgp.reuse): by default a localCheckpoint whose storage
     # level adapts to the input size (metadata only, no fingerprint job);
@@ -133,7 +154,7 @@ def run_pipeline(
         # instead of serially on the post-clustering critical path — and
         # the big linking query analyzes against three tiny checkpointed
         # leaves instead of the whole dictionary subtree.
-        return build_alias_artifacts(model.alias_dict, cfg, materialize=True)
+        return build_alias_artifacts(model.alias_dict, cfg, reuse=reuse)
 
     relations, clusters, alias_art = _run_concurrently(
         spark, _relations_branch, _coref_branch, _alias_branch
@@ -143,7 +164,6 @@ def run_pipeline(
         cluster_surfaces(clusters, mentions), model.alias_dict, cfg, artifacts=alias_art
     )
     triples = reuse(assemble_triples(relations, clusters, links), "triples")
-    edges, entity_dict, relation_dict = materialize_graph(triples, reuse=reuse)
     return {
         "documents": documents,
         "mentions": mentions,
@@ -153,9 +173,6 @@ def run_pipeline(
         "links": links,
         "link_candidates": candidates,
         "triples": triples,
-        "edges": edges,
-        "entity_dict": entity_dict,
-        "relation_dict": relation_dict,
     }
 
 

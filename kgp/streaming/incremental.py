@@ -2,8 +2,11 @@
 
 The reference is pure batch (SURVEY.md §2.9); this module provides the
 documented upgrade path: ``readStream`` over the transcript table +
-``Trigger.AvailableNow`` + ``foreachBatch`` wrapping the SAME batch stage
-functions — no operator is reimplemented for streaming.
+``Trigger.AvailableNow`` + ``foreachBatch`` calling the batch pipeline's
+own composition (:func:`kgp.stages.pipeline.build_triples`, the part of
+``run_pipeline`` that ends at the triples table, with its default reuse
+hook) on each micro-batch — no stage is re-wired for streaming, and no
+graph id job runs per batch.
 
 Conversation completeness is ENFORCED, not assumed: raw rows are archived
 per batch, and when a batch carries a fragment of a conversation seen in
@@ -30,6 +33,7 @@ from pyspark.sql import functions as F
 
 from kgp.config import DEFAULT_CONFIG, PipelineConfig
 from kgp.fixtures import TRANSCRIPT_SCHEMA
+from kgp.stages.pipeline import build_triples
 
 
 def incremental_triples(
@@ -42,16 +46,9 @@ def incremental_triples(
 ):
     """Stream transcript parquet files -> append-only triples table.
 
-    Returns the finished StreamingQuery (Trigger.AvailableNow drains all
-    pending input then stops — the incremental-batch pattern).
+    Returns the sink path once the query has finished (Trigger.AvailableNow
+    drains all pending input then stops — the incremental-batch pattern).
     """
-    from kgp.stages.coref import cluster_unionfind, positive_edges, score_coref_pairs
-    from kgp.stages.linking import cluster_surfaces, link_clusters
-    from kgp.stages.mentions import mentions_from_tagged, pair_turn_tokens, tag_turns
-    from kgp.stages.pairs import coref_pairs, re_pairs
-    from kgp.stages.relations import classify_relations
-    from kgp.stages.triples import assemble_triples
-
     sink = os.path.join(outdir, "triples")
     raw = os.path.join(outdir, "raw")
     checkpoint = os.path.join(outdir, "_checkpoint")
@@ -64,7 +61,7 @@ def incremental_triples(
         # foreachBatch's exactly-once-per-batch-id contract), then rebuild
         # the full row set of every conversation present in this batch:
         # earlier fragments of a split conversation are pulled back in, so
-        # the stages below always see conversation-complete input.
+        # the pipeline below always sees conversation-complete input.
         fragment.write.mode("append").parquet(raw)
         batch_convs = fragment.select("conv_id").distinct()
         transcripts = (
@@ -77,22 +74,7 @@ def incremental_triples(
             .dropDuplicates(["conv_id", "turn_idx"])
             .localCheckpoint()
         )
-        # same fused single-pass tagger as the batch pipeline
-        tagged = tag_turns(spark, transcripts, model.surfaces, cfg).localCheckpoint()
-        mentions = mentions_from_tagged(tagged)
-        relations = classify_relations(
-            re_pairs(mentions, cfg), pair_turn_tokens(tagged), cfg
-        )
-        clusters = cluster_unionfind(
-            mentions,
-            positive_edges(
-                score_coref_pairs(spark, coref_pairs(mentions, cfg), model.surface_groups, cfg),
-                cfg,
-            ),
-            cfg,
-        ).localCheckpoint()
-        links, _ = link_clusters(cluster_surfaces(clusters, mentions), model.alias_dict, cfg)
-        triples = assemble_triples(relations, clusters, links.localCheckpoint())
+        triples = build_triples(spark, transcripts, model, cfg)["triples"]
         (
             triples.withColumn("batch_id", F.lit(batch_id))
             .write.mode("append")

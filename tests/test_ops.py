@@ -327,7 +327,8 @@ def test_extract_features_real_decoders(spark):
 def test_run_dedup_resumable_matches_and_resumes(spark, docs, tmp_path):
     """The lineage-backed dedup entry (stage-table reuse instead of
     localCheckpoint) yields identical pairs, and a re-run resumes from
-    the committed stage tables instead of recomputing."""
+    the committed stage tables instead of recomputing — without planning
+    the op again, so its ``on_drop`` stays silent."""
     import os
 
     from kgp.ops.dedup import minhash_lsh_pairs, ngram_jaccard_pairs, run_dedup_resumable
@@ -337,7 +338,9 @@ def test_run_dedup_resumable_matches_and_resumes(spark, docs, tmp_path):
         ("ngram", lambda: ngram_jaccard_pairs(docs, threshold=0.5)),
     ):
         out = str(tmp_path / method)
+        drops = []
         kw = {"k": 32, "bands": 8} if method == "minhash" else {"threshold": 0.5}
+        kw["on_drop"] = drops.append
         got = run_dedup_resumable(spark, docs, out, method=method, **kw)
         want = {tuple(sorted((r["doc_a"], r["doc_b"]))) for r in direct().collect()}
         assert {
@@ -352,6 +355,7 @@ def test_run_dedup_resumable_matches_and_resumes(spark, docs, tmp_path):
         again = run_dedup_resumable(spark, docs, out, method=method, **kw)
         assert again.count() == len(want)
         assert os.path.getmtime(manifest) == m0
+        assert drops == [0]
 
 
 def test_block_pairs_boundaries(spark):

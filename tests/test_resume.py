@@ -40,6 +40,10 @@ def test_resume_skips_and_reproduces(spark, tmp_path):
     snap1 = _snap(out1)
     assert snap1["triples"], "pipeline produced no triples"
     tagged1 = open(os.path.join(ldir, "tagged.json")).read()
+    # the linking dictionary is pinned through the same hook
+    alias_stages = ["alias_norm", "alias_wtab", "alias_posting"]
+    assert all(log.read_manifest(st)["status"] == "ok" for st in alias_stages)
+    alias1 = {st: open(os.path.join(ldir, f"{st}.json")).read() for st in alias_stages}
 
     # simulate a crash after the tagger and relation branch: wipe the
     # manifests of every later reuse point
@@ -51,6 +55,7 @@ def test_resume_skips_and_reproduces(spark, tmp_path):
     assert _snap(out2) == snap1  # byte-identical output after resume
     # earlier stages were skipped (manifest untouched), wiped ones recommitted
     assert open(os.path.join(ldir, "tagged.json")).read() == tagged1
+    assert {st: open(os.path.join(ldir, f"{st}.json")).read() for st in alias_stages} == alias1
     assert all(log.read_manifest(s)["status"] == "ok" for s in wiped)
 
     # per-partition metrics present and consistent: the tagged stage holds
@@ -67,6 +72,26 @@ def test_resume_skips_and_reproduces(spark, tmp_path):
     assert len(_snap(out3)["mentions"]) > len(snap1["mentions"])
     m3 = log.read_manifest("tagged")
     assert m3["input"] != m1["input"]  # fingerprint change recorded
+
+
+def test_resume_mention_free_input(spark, tmp_path):
+    """Zero-row stage tables (a bucketed stage with no rows writes no part
+    file) read back with the manifest's schema: build and resume both
+    yield an empty graph instead of failing schema inference."""
+    quiet = [
+        {"conv_id": f"conv-quiet-{c}", "turn_idx": i, "role": "user",
+         "text": "ok thanks, sounds good", "tool": None, "ts": None}
+        for c in range(3)
+        for i in range(5)
+    ]
+    t = spark.createDataFrame(quiet, schema=TRANSCRIPT_SCHEMA)
+    model = fixture_model(spark, FX)
+    outdir = str(tmp_path / "quiet")
+    for _ in range(2):  # build, then resume from the committed tables
+        out, log = _run(spark, t, model, outdir)
+        assert out["triples"].count() == 0
+        assert out["edges"].count() == 0
+    assert log.read_manifest("tagged")["rows_out"] == 0
 
 
 def test_resume_after_alias_dict_change_is_fresh(spark, tmp_path):
