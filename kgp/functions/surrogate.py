@@ -56,9 +56,12 @@ def normalize_text(s: str) -> str:
     return _WS_RE.sub(" ", s).strip().lower()
 
 
-def tokenize(text: str) -> list[str]:
+def tokenize(text: str | None) -> list[str]:
     """Whitespace split with punctuation as standalone tokens (P15 + Basic
-    tokenizer punctuation-splitting behaviour)."""
+    tokenizer punctuation-splitting behaviour). A null text has no tokens,
+    as in :func:`tokenize_batch`."""
+    if text is None:
+        return []
     return [t for t in _WS_RE.split(_PUNCT_RE.sub(r" \1 ", normalize_text(text))) if t]
 
 

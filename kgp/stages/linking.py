@@ -153,6 +153,7 @@ def link_clusters(
     cfg: PipelineConfig = DEFAULT_CONFIG,
     on_drop=None,
     artifacts: AliasArtifacts | None = None,
+    reuse=None,
 ) -> tuple[DataFrame, DataFrame]:
     """-> (links, candidates). links: one best entity per cluster.
 
@@ -160,6 +161,14 @@ def link_clusters(
     ``artifacts``: pre-built dictionary tables (see
     :func:`build_alias_artifacts`, where the stop-gram-cap semantics are
     documented); computed inline from ``alias_dict`` when not supplied.
+
+    ``reuse``: a ``(df, name)`` reuse hook (:mod:`kgp.reuse`); when given,
+    the per-cluster candidate table is pinned through it as
+    ``link_candidates`` and ``links`` is the argmax over the pinned table,
+    so the recall join and the cross-encoder run once however many
+    consumers (triples, the links deliverable, the EL metric and θ sweep)
+    read either output. Without a hook both outputs stay lazy and each
+    action re-runs the linking query.
     """
     n = cfg.ngram_size
     if artifacts is None:
@@ -218,6 +227,8 @@ def link_clusters(
         "cluster_id", "surface", "alias", "entity_id", "score"
     )
 
+    if reuse is not None:
+        candidates = reuse(candidates, "link_candidates")
     return _best_links(candidates), candidates
 
 

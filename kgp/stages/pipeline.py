@@ -108,7 +108,9 @@ def build_triples(
     # downstream query small — with plain persist() the full pipeline tree
     # is re-analyzed on every action and Catalyst planning dominates.
     # Only multi-consumer outputs are checkpointed (tagged feeds 3
-    # branches, clusters 2, triples is scanned 3x by materialize_graph),
+    # branches, clusters 2, triples is scanned 3x by materialize_graph;
+    # link candidates feed triples, the links deliverable and the EL
+    # metric/sweep queries),
     # and EAGERLY: consumers sit in one downstream query (some under
     # broadcast-exchange threads), and only an already-materialized
     # checkpoint guarantees the producer runs exactly once.
@@ -161,7 +163,11 @@ def build_triples(
     )
 
     links, candidates = link_clusters(
-        cluster_surfaces(clusters, mentions), model.alias_dict, cfg, artifacts=alias_art
+        cluster_surfaces(clusters, mentions),
+        model.alias_dict,
+        cfg,
+        artifacts=alias_art,
+        reuse=reuse,
     )
     triples = reuse(assemble_triples(relations, clusters, links), "triples")
     return {

@@ -20,7 +20,9 @@ FX = FixtureConfig(n_conversations=20, n_entities=30)
 def _snap(out):
     return {
         name: sorted(tuple(r) for r in out[name].collect())
-        for name in ["mentions", "relations", "clusters", "links", "triples", "edges"]
+        for name in [
+            "mentions", "relations", "clusters", "links", "link_candidates", "triples", "edges",
+        ]
     }
 
 
@@ -47,7 +49,7 @@ def test_resume_skips_and_reproduces(spark, tmp_path):
 
     # simulate a crash after the tagger and relation branch: wipe the
     # manifests of every later reuse point
-    wiped = ["clusters", "triples", "graph_ids", "graph_fwd"]
+    wiped = ["clusters", "link_candidates", "triples", "graph_ids", "graph_fwd"]
     for stage in wiped:
         os.remove(os.path.join(ldir, f"{stage}.json"))
 

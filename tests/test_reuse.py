@@ -16,8 +16,16 @@ from kgp.stages.pipeline import fixture_model, run_pipeline
 FX = FixtureConfig(n_conversations=20, n_entities=30)
 
 
-def _snap(out, names=("mentions", "relations", "clusters", "triples", "edges")):
+_NAMES = ("mentions", "relations", "clusters", "links", "link_candidates", "triples", "edges")
+
+
+def _snap(out, names=_NAMES):
     return {n: sorted(tuple(r) for r in out[n].collect()) for n in names}
+
+
+def _python_udf_nodes(df):
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return [node for node in ("ArrowEvalPython", "BatchEvalPython") if node in plan]
 
 
 def test_pipeline_table_reuse_matches_local(spark, tmp_path):
@@ -25,10 +33,21 @@ def test_pipeline_table_reuse_matches_local(spark, tmp_path):
     t = spark.createDataFrame(rows, schema=TRANSCRIPT_SCHEMA)
     model = fixture_model(spark, FX)
 
-    base = _snap(run_pipeline(spark, t, model))
+    local = run_pipeline(spark, t, model)
+    base = _snap(local)
     fp = input_fingerprint(t, model, DEFAULT_CONFIG)
     reuse = lineage_reuse(spark, str(tmp_path / "stages"), fp)
     out = run_pipeline(spark, t, model, reuse=reuse)
+
+    # the linking query (recall join + cross-encoder) runs once per run:
+    # the candidate table is pinned, and links and every candidate query
+    # read the pin instead of planning the scoring UDF again
+    for o in (local, out):
+        assert _python_udf_nodes(o["links"]) == []
+        assert _python_udf_nodes(o["link_candidates"]) == []
+    analyzed = local["link_candidates"]._jdf.queryExecution().analyzed()
+    assert analyzed.getClass().getSimpleName() == "LogicalRDD"  # a localCheckpoint
+    assert reuse.lineage.read_manifest("link_candidates")["status"] == "ok"
 
     # identical results, identical schemas (no bucket column leaks)
     assert _snap(out) == base
